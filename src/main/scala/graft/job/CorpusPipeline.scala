@@ -27,8 +27,7 @@ object CorpusPipeline {
 
   /** kept: one row per retained (url, text); stages: (stage, n_rows)
     * counts in pipeline order, a queryable no-silent-drop record.
-    */
-  /** `neardupConverged`/`neardupRounds` surface the clustering stage's
+    * `neardupConverged`/`neardupRounds` surface the clustering stage's
     * convergence BY VALUE (ADVICE r5: an unconverged propagation means
     * partially-merged labels and must be observable, never a log line
     * a 100 TB job scrolls past).
@@ -42,8 +41,8 @@ object CorpusPipeline {
     * tracking-param re-crawl (canonical-URL collapse), a mirrored copy
     * (exact-text collapse), and an appended-boilerplate variant
     * (near-dup collapse). Slice membership is url-hash based (stable
-    * under repartitioning). Shared by the x7 driver query and
-    * `PipelineBench`.
+    * under repartitioning). Shared by the x7 driver query and the
+    * `curate_kb` workload of `perfbench/`.
     */
   def plantRepublications(ext: DataFrame): DataFrame = {
     def slice(m: Int) = ext.filter(pmod(xxhash64(col("url")), lit(m)) === 0)
@@ -56,6 +55,14 @@ object CorpusPipeline {
         concat(col("url"), lit("~amp")).as("url"),
         concat(col("text"), lit(" via mobile reader")).as("text")))
   }
+
+  // Fixed stage settings; no caller tunes them (the WIDE gate and d12
+  // are described on `run`). Word 5-gram minhash, 32 hashes, 8 bands:
+  private val (k, numHashes, bands, minEstJaccard) = (5, 32, 8, 0.5)
+  private val (maxBandBucket, maxIter) = (Dedup.DefaultMaxBandBucket, 10)
+  private val (minTokens, maxTokens, maxPunctRatio, minQuality) = (5L, 10000000L, 0.3, 0.0)
+  private val (decontamN, maxContamFrac) = (8, 0.0) // 0.0: any shared gram drops
+  private val (semDedupMinCos, semDedupMaxCell) = (0.92, 10000)
 
   /** `extracted` needs columns (url: string, text: string); rows with
     * NULL text (failed extractions) are dropped as stage 0.
@@ -125,22 +132,14 @@ object CorpusPipeline {
     * a document. Adds a `5b_semdedup` stage row.
     */
   def run(extracted: DataFrame,
-          k: Int = 5, numHashes: Int = 32, bands: Int = 8,
-          minEstJaccard: Double = 0.5,
-          maxBandBucket: Int = Dedup.DefaultMaxBandBucket,
-          maxIter: Int = 10,
-          minTokens: Long = 5, maxTokens: Long = 10000000L,
-          maxPunctRatio: Double = 0.3, minQuality: Double = 0.0,
           maxDupLineFrac: Double = 1.0, scrubPii: Boolean = false,
           boilerplateLineMinDocs: Option[Int] = None,
           maxDocsPerHost: Option[Int] = None,
           repairMojibake: Boolean = false,
           decontamBench: Option[DataFrame] = None,
-          decontamN: Int = 8, maxContamFrac: Double = 0.0,
           sampleByLang: Option[Map[String, Double]] = None,
           semDedupEmbeddings: Option[DataFrame] = None,
-          semDedupMinCos: Double = 0.92,
-          semDedupCells: Int = 16, semDedupMaxCell: Int = 10000,
+          semDedupCells: Int = 16,
           checkpoint: DataFrame => DataFrame = _.localCheckpoint()): Result = {
     val spark = extracted.sparkSession
 
@@ -221,9 +220,9 @@ object CorpusPipeline {
         emb.select(size(col("embedding"))).limit(1).collect().headOption match {
           case Some(r) =>
             val dim = r.getInt(0)
-            // cells/cap are config seams: nCells must grow with the
-            // corpus (cell population ≈ corpus/nCells must stay under
-            // maxCell or the skew guard neutralizes the whole stage)
+            // cells is a config seam: nCells must grow with the corpus
+            // (cell population ≈ corpus/nCells must stay under maxCell
+            // or the skew guard neutralizes the whole stage)
             val drops = Similarity.semDedup(emb, dim,
                 minCos = semDedupMinCos, nCells = semDedupCells,
                 maxCell = semDedupMaxCell, idCol = "url")

@@ -160,6 +160,7 @@ object ExtractJob {
       // decode pass over everything just written (VERDICT r1 §wrong-3).
       // MEMORY_AND_DISK: spilled blocks stay local to the executor that
       // produced them; strictly cheaper than a parquet round-trip.
+      val startedAt = System.currentTimeMillis() // lineage brackets extract + write
       val extracted = plan(spark, waveInput, prevDone, cfg.spec, failBucket)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -167,7 +168,6 @@ object ExtractJob {
 
         // A1 metrics from the in-plan wave dataset (cached blocks);
         // prevDone buckets are already anti-joined out inside plan()
-        val now = System.currentTimeMillis()
         val stats = extracted.toDF()
           .groupBy("bucket")
           .agg(count(lit(1)).as("nDocs"),
@@ -178,7 +178,7 @@ object ExtractJob {
           .collect()
         val rows = stats.map { r =>
           PartitionLineage(cfg.runId, r.getInt(0), "done", r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4), r.getLong(5), now, System.currentTimeMillis(), attempt)
+            r.getLong(3), r.getLong(4), r.getLong(5), startedAt, System.currentTimeMillis(), attempt)
         }.toSeq
         if (rows.nonEmpty) Tables.append(spark.createDataset(rows).toDF(), cfg.lineagePath)
         allBuckets ++= rows.map(_.bucket)

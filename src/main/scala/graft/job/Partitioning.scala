@@ -29,7 +29,7 @@ object Partitioning {
   }
 
   /** Bucket column over (url, html). `bigBuckets = 0` disables the
-    * big-doc range (the UNSALTED control used by SkewBench's A/B).
+    * big-doc range: every doc hashes into the base buckets, unsalted.
     */
   def bucketCol(spec: BucketSpec, url: Column, html: Column): Column = {
     val base = pmod(xxhash64(url), lit(spec.buckets))

@@ -250,8 +250,11 @@ object Dedup {
     * rest of the machine idles. When (and only when) the scan exposes
     * fewer partitions than the session's parallelism, spread rows with
     * ONE narrow round-robin exchange; at deploy scale input splits ≥
-    * cores and this is a provable no-op (no shuffle added), so it is
-    * NOT a local-mode constant — it derives from the actual input.
+    * cores and no shuffle is added, so it is NOT a local-mode constant
+    * — it derives from the actual input. Caveat: the probe
+    * `df.rdd.getNumPartitions` plans `df` physically. Over a scan that
+    * is plan-time only; if `df` holds a shuffle, AQE runs that shuffle
+    * in an eager job and the count read is the coalesced one.
     * Results are partitioning-invariant (every consumer aggregates,
     * joins or sorts; round-robin repartition is retry-deterministic
     * via Spark's sort-before-repartition).

@@ -82,6 +82,29 @@ class ExtractJobE2ESpec extends AnyFunSuite {
     assert(dupDone == 0, "a bucket must be marked done exactly once")
   }
 
+  test("lineage: startedAt/finishedAt bracket each bucket's extraction and write") {
+    import spark.implicits._
+    val (cp, _) = paths
+    val dir = tmpDir()
+    val cfg = ExtractJob.Config("timed", cp, s"$dir/out", s"$dir/lineage",
+      Partitioning.BucketSpec(buckets = 4, bigDocBytes = 4L << 20, bigBuckets = 1))
+    ExtractJob.run(spark, cfg)
+    val lineage = spark.read.parquet(s"$dir/lineage")
+      .select("bucket", "startedAt", "finishedAt").as[(Int, Long, Long)].collect()
+    assert(lineage.nonEmpty)
+    lineage.foreach { case (b, startedAt, finishedAt) =>
+      // data files only: skip Spark's hidden .crc and _SUCCESS files
+      val files = new java.io.File(s"$dir/out/bucket=$b").listFiles()
+        .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+      assert(files.nonEmpty, s"bucket $b has no data files")
+      files.foreach { f =>
+        val m = f.lastModified()
+        assert(startedAt <= m && m <= finishedAt,
+          s"bucket $b: ${f.getName} written at $m, outside lineage [$startedAt, $finishedAt]")
+      }
+    }
+  }
+
   test("plan shape: exactly one exchange on the data path, pruned scan") {
     val (cp, _) = paths
     val corpus = spark.read.parquet(cp)

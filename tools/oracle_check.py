@@ -28,7 +28,9 @@ def canon(v):
     if isinstance(v, decimal.Decimal):
         v = float(v)
     if isinstance(v, float):
-        return f"{v:.10g}"  # also folds -0.0 vs 0.0 only if upstream agrees; both engines emit the same sign here
+        # full precision: repr round-trips, so a last-bit divergence
+        # changes the hash (it also tells -0.0 from 0.0)
+        return repr(v)
     if isinstance(v, list):
         return "[" + ",".join(canon(x) for x in v) + "]"
     return str(v)
